@@ -33,23 +33,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Keys whose implementation changed THIS round — their recorded driver
 # evidence is stale by construction, so they jump the queue regardless of
-# past green rows (the ADVICE-r05 staleness lesson: a changed key must
-# never coast on its old rank). The r11 list (all 16 re-passed their
-# driver rows in CORRECTNESS_r11) is retired.
-_PROMOTED_R12 = [
-    # r12 OPTIMIZATION round: every key whose physical implementation
-    # changed (OPTIMIZATION_r12.md) — outputs proven identical locally
-    # (same-session exceptAll checks + oracle parity at up to 3 scales),
-    # but changed keys never coast on their old driver rank:
-    "llm_substring_dedup",       # single-pass gram verdict (1 Generate)
-    "llm_block_dedup",           # two-seed xxhash64 window key (128-bit)
-    "llm_kmeans_lloyd",          # per-row array_min argmin scoring
-    "llm_ann_ivf",               # shared lloyd_fit + ivf_parts checkpoints
-    "llm_ann_pq",                # per-subspace codes argmin + dim guard
-    "llm_ann_ivf_clustered",     # corpus/m checkpoints + shared helpers
-    "llm_ann_pq_clustered",      # corpus/m checkpoints + shared helpers
-    "llm_semdedup",              # blocked cell verifier
+# past green rows (a changed key must never coast on its old rank). The
+# r12 list (all 8 fully passed in CORRECTNESS_r12) is retired.
+_PROMOTED_R13 = [
+    # r13: queries no longer mutate session-global conf
+    "llm_dedup_clusters",        # per-round repartition(n) instead of conf.set
+    "join_bloom_prefilter",      # demo confs through io.scoped_conf
 ]
+
 
 def _coverage_rank() -> tuple[dict[str, int], dict[str, int]]:
     """Rank keys by how much driver-side correctness evidence they have.
@@ -91,7 +82,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     driver's fixed-prefix check lands on the keys that need it most:
 
     tier 0: keys whose implementation changed since their last driver
-            row (_PROMOTED_R12) — their green rows are stale evidence;
+            row (_PROMOTED_R13) — their green rows are stale evidence;
     tier 3: previously rows-only keys that NOW carry a hash oracle
             (re-check upgrades r01/r02 recorded as weaker evidence);
     tier 4: never-driver-checked keys in name order (16 remain after
@@ -103,7 +94,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             adds no evidence).
     """
     rank, last_pass = _coverage_rank()
-    promoted = {k: i for i, k in enumerate(_PROMOTED_R12)}
+    promoted = {k: i for i, k in enumerate(_PROMOTED_R13)}
 
     def sort_key(item: tuple[str, Callable]) -> tuple[int, int, str]:
         name = item[0]

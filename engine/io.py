@@ -16,12 +16,20 @@ projection is pushed into the scan by Catalyst (verify: ``PushedFilters``
 in ``df.explain('formatted')``). On a real cluster the same code reads
 partitioned directories with partition pruning; nothing here assumes
 single-node.
+
+Session state: the engine keeps one record per ``SparkSession``
+(:func:`session_state`). The record is created the first time a session
+is seen, and ``SESSION_CONF`` is applied then and never again, so a
+plain ``spark.conf.set`` made afterwards sticks.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import weakref
+from collections.abc import Iterator
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +50,8 @@ TABLES = (
     "embeddings",
 )
 
-#: SQL configs every session needs. Applied idempotently by ``configure``.
+#: SQL configs every session needs. Applied once, when the engine first
+#: sees a session (:func:`session_state`).
 SESSION_CONF = {
     # events.ts is INT64 TIMESTAMP(NANOS) — unreadable without this flag.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -65,8 +74,8 @@ SESSION_CONF = {
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
     # Whole-stage codegen admits plans up to 256 fields (default 100):
     # llm_centroids' single-pass 64-avg aggregate carries 129 aggregate
-    # buffer slots, which silently fell back to interpreted eval (r06
-    # measured: 1.33 s vs 0.14 s executed for the same plan). 256 keeps
+    # buffer slots, which silently fell back to interpreted eval
+    # (measured: 1.33 s vs 0.14 s executed for the same plan). 256 keeps
     # the JIT guard (hugeMethodLimit) while covering wide-agg shapes.
     "spark.sql.codegen.maxFields": "256",
 }
@@ -74,8 +83,8 @@ SESSION_CONF = {
 
 def tmpdir(prefix: str) -> str:
     """mkdtemp with atexit cleanup — scratch dirs (stream inputs, snapshot
-    handoffs) must not accumulate across runs (r01 ADVICE: unbounded /tmp
-    growth). Deterministic REUSABLE dirs use fixed paths instead."""
+    handoffs) must not accumulate across runs. Deterministic REUSABLE
+    dirs use fixed paths instead."""
     import atexit
     import shutil
     import tempfile
@@ -85,47 +94,65 @@ def tmpdir(prefix: str) -> str:
     return d
 
 
-#: Per-session conf overrides (session → {conf: value}). ``configure``
-#: re-applies SESSION_CONF on every ``load_tables`` cache miss, which used
-#: to silently clobber any bench-harness toggle set between queries (the
-#: r06 AQE tier was a no-op for exactly this reason — ADVICE r06, high).
-#: Overrides registered here WIN over SESSION_CONF on every re-apply, so a
-#: harness decision survives arbitrary configure() calls. Keyed WEAKLY by
-#: the session object (ADVICE r07): an id()-keyed dict never evicted, so a
-#: new session allocated at a dead session's address silently inherited
-#: its overrides (e.g. AQE-off from a prior bench fixture).
-_conf_overrides: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
+@dataclass
+class SessionRecord:
+    """Everything the engine keeps for one ``SparkSession``.
+
+    ``tables`` maps ``sf_dir`` to its lazy table DataFrames, ``views`` is
+    the ``sf_dir`` the temp views point at, ``plans`` holds the prepared
+    plans of ``@query(plan_cache=True)`` keys by ``(sf_dir, key)`` and
+    ``stream_inputs`` the per-``sf_dir`` streaming input directory.
+    Caching plans is safe because DataFrames are immutable lazy plans:
+    every action still re-analyzes and re-scans. File listings are pinned
+    per ``(session, sf_dir)``.
+    """
+
+    tables: dict[str, dict[str, DataFrame]] = field(default_factory=dict)
+    views: str | None = None
+    plans: dict[tuple[str, str], DataFrame] = field(default_factory=dict)
+    stream_inputs: dict[str, str] = field(default_factory=dict)
+
+
+#: Weakly keyed, so a new session can never inherit the record of a dead
+#: one allocated at the same address. The cached DataFrames reference
+#: their session, so a session with cached tables or plans stays alive
+#: until process exit; every harness here creates one or two per process.
+_sessions: "weakref.WeakKeyDictionary[SparkSession, SessionRecord]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def set_conf_overrides(spark: SparkSession, overrides: dict[str, str]) -> None:
-    """Set runtime confs that persist across ``configure()`` re-applies."""
-    _conf_overrides.setdefault(spark, {}).update(overrides)
-    for k, v in overrides.items():
+def session_state(spark: SparkSession) -> SessionRecord:
+    """The engine's record for ``spark``. The first call for a session
+    creates it and applies ``SESSION_CONF``; later calls change no conf."""
+    rec = _sessions.get(spark)
+    if rec is None:
+        for k, v in SESSION_CONF.items():
+            spark.conf.set(k, v)
+        rec = _sessions[spark] = SessionRecord()
+    return rec
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body of the ``with`` block, then restore the
+    previous values, so a query's conf choices never leak to others."""
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
         spark.conf.set(k, v)
-
-
-def configure(spark: SparkSession) -> SparkSession:
-    """Apply required runtime confs to an existing session (idempotent).
-
-    Confs registered via :func:`set_conf_overrides` take precedence over
-    ``SESSION_CONF`` — the engine's defaults must not undo an explicit
-    harness decision mid-run.
-    """
-    ov = _conf_overrides.get(spark, {})
-    for k, v in SESSION_CONF.items():
-        spark.conf.set(k, ov.get(k, v))
-    return spark
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def _dir_bytes(sf_dir: str) -> int | None:
     """Total on-disk bytes under ``sf_dir``; None when the size is unknown
     (unreadable or empty/missing dir — os.walk yields nothing for both).
-    Shared by the three input-sizing helpers so missing-dir semantics are
-    decided per caller, explicitly (ADVICE r06: the old copies disagreed,
-    and shuffle_partitions_for returned the small-fixture floor — the
-    worst possible value — for a mistyped big-fixture path)."""
+    Shared by the three input-sizing helpers; each decides explicitly what
+    an unknown size means, so a mistyped big-fixture path never gets the
+    small-fixture value."""
     try:
         total = sum(
             os.path.getsize(os.path.join(root, f))
@@ -137,18 +164,27 @@ def _dir_bytes(sf_dir: str) -> int | None:
     return total or None
 
 
-def _env_cores(default: int = 32) -> int:
-    """Core count the harness was told to run with ($SPARK_GRAFT_CPUS —
-    the same variable that sizes local[N]), falling back to ``default``.
-    The input-sizing helpers derive their parallelism caps from this
-    (r11): the driver ALSO benches at a lower core count to measure
-    scaling, and a constant tuned to this machine's 32 threads would
-    over-partition those runs — partitions ≈ min(data-derived, cores-
-    derived) must track BOTH axes."""
+def host_cores() -> int:
+    """Cores to run with: ``$SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may run on. Sizes ``local[N]`` and caps the input-sizing
+    helpers, so partitions ≈ min(data-derived, cores-derived) track both
+    the input and the machine (the driver also benches at a lower core
+    count to measure scaling)."""
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", default)))
-    except ValueError:
-        return default
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
+
+
+def driver_heap() -> str:
+    """Driver heap for a local session: 60 % of physical RAM (``MemTotal``),
+    leaving the rest to off-heap buffers, the JVM itself and the Python
+    workers. A heap above physical RAM would let Spark's memory manager
+    plan allocations that cannot exist, so it never spills and the kernel
+    kills the process instead."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{kib * 6 // 10 // 1024}m"
 
 
 def shuffle_partitions_for(sf_dir: str, cap: int | None = None) -> int:
@@ -166,7 +202,8 @@ def shuffle_partitions_for(sf_dir: str, cap: int | None = None) -> int:
     Above ~8 GB of input the cluster rule starts to bind even locally:
     at cap=32 a 22 GB fixture (sf100) pushes ≈700 MB of shuffle input
     through each reduce task and the state-heavy shapes spill. Measured
-    at sf100 (warm noop-sink, same session, 32/64/96/128 partitions):
+    at sf100 on a 32-thread host (warm noop-sink, same session,
+    32/64/96/128 partitions):
     `join_waiting_orders` 124.7 / 83.8 / 74.4 / 82.6 s,
     `agg_revenue_by_nation` 15.1 / 15.7 / 18.8 / 54.4 s,
     `cdc_snapshot_diff` ~21.0 / 21.6 / — / — s, `win_sessionize`
@@ -180,13 +217,11 @@ def shuffle_partitions_for(sf_dir: str, cap: int | None = None) -> int:
     plans are unchanged. Unknown input size → ``cap`` (the safe value for
     a big fixture whose path was mistyped; AQE coalesces the excess).
 
-    ``cap`` defaults to the harness core count ($SPARK_GRAFT_CPUS,
-    r11) so a lower-core driver run caps parallelism at ITS machine
-    size instead of this host's 32 threads; at 32 CPUs every value is
-    unchanged.
+    ``cap`` defaults to :func:`host_cores` (at least 8), so a lower-core
+    run caps parallelism at its own machine size.
     """
     if cap is None:
-        cap = max(8, _env_cores())
+        cap = max(8, host_cores())
     total = _dir_bytes(sf_dir)
     if total is None:
         return cap
@@ -204,25 +239,24 @@ def max_partition_bytes_for(sf_dir: str, cores: int | None = None) -> str:
     128 MB default packs into ~12 input splits and leaves 32 cores
     under-fed on scan-bound shapes. Target ≈ total-input / (2 × cores)
     so every core gets ~2 scan tasks, clamped to [16 MB, 128 MB]
-    (measured sf10 pricing summary: 128 MB → 1.04 s, 32 MB → 0.81 s,
-    16 MB → 0.75 s warm min; no effect below one row group).
+    (measured sf10 pricing summary on 32 threads: 128 MB → 1.04 s,
+    32 MB → 0.81 s, 16 MB → 0.75 s warm min; no effect below one row
+    group).
 
     Below ~512 MB total the regime inverts: the data cannot feed 32 cores
     for longer than a task launch, so task COUNT (not feed rate) is the
     cost, and fewer/larger splits win. Floor at 64 MB there — measured
-    r06 at sf1 (183 MB), interleaved min-of-5 over the headline-8:
+    at sf1 (183 MB), interleaved min-of-5 over the headline-8:
     (32 shuffle, 16 m) 6.94 s → (16, 64 m) 6.23 s → (8, 64 m) 6.21 s;
     the mpb move is the significant factor (shuffle 16 vs 32 was inside
-    noise, consistent with the earlier recorded sweep). On a real
-    cluster the default stands — this helper exists for single-host
-    benching where the file count, not the data, is the parallelism cap.
-    Unknown input size → the Spark default ("128m"). ``cores`` defaults
-    to the harness core count ($SPARK_GRAFT_CPUS, r11) so the
-    total/(2×cores) split target tracks the machine the bench actually
-    runs on; at 32 CPUs every value is unchanged.
+    noise). On a real cluster the default stands — this helper exists
+    for single-host benching where the file count, not the data, is the
+    parallelism cap. Unknown input size → the Spark default ("128m").
+    ``cores`` defaults to :func:`host_cores`, so the total/(2×cores)
+    split target tracks the machine the bench actually runs on.
     """
     if cores is None:
-        cores = _env_cores()
+        cores = host_cores()
     total = _dir_bytes(sf_dir)
     if total is None:
         return "128m"
@@ -240,23 +274,15 @@ def adaptive_for(sf_dir: str) -> str:
     sync with the driver, re-optimize). On a sub-512 MB fixture there is
     nothing to adapt — partitions are already input-sized and every
     join's small side broadcasts — so the barrier is pure latency.
-    Measured r06 A/B/A at sf0.1 (headline-8, warm min-of-5, one
-    session): `win_sessionize` 0.28 s (AQE) vs 0.14 s (no AQE) — a
-    single-exchange window query pays a full extra stage round-trip —
-    headline total 1.66 vs 1.54 s. Above 512 MB AQE stays ON: skew
-    splitting and runtime join switching are the 100 TB posture
-    (SESSION_CONF default, unchanged — the correctness gate always runs
-    with AQE on; the full 252-key sf0.01 comparator was also re-swept
-    green with AQE OFF before this helper landed, so the toggle is
+    Measured A/B/A at sf0.1 (headline-8, warm min-of-5, one session):
+    `win_sessionize` 0.28 s (AQE) vs 0.14 s (no AQE) — a single-exchange
+    window query pays a full extra stage round-trip — headline total
+    1.66 vs 1.54 s. Above 512 MB AQE stays ON: skew splitting and
+    runtime join switching are the 100 TB posture (``SESSION_CONF``
+    default — the correctness gate always runs with AQE on; the full
+    sf0.01 comparator is also green with AQE OFF, so the toggle is
     hash-neutral by measurement). Unknown input size → "true" (fail to
     the 100 TB posture).
-
-    NOTE for harnesses: set this via :func:`apply_bench_confs` /
-    :func:`set_conf_overrides`, NOT a bare ``spark.conf.set`` — the first
-    ``load_tables`` cache miss re-applies ``SESSION_CONF`` (AQE on) and
-    silently undoes a bare set. This is exactly what happened to every
-    r06 bench run (ADVICE r06, high): the recorded numbers were all
-    AQE-on despite the harness believing otherwise.
     """
     total = _dir_bytes(sf_dir)
     if total is None:
@@ -265,76 +291,46 @@ def adaptive_for(sf_dir: str) -> str:
 
 
 def apply_bench_confs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Register the three input-sized bench confs as sticky overrides.
-
-    One call per (session, fixture) switch in a bench harness: computes
-    shuffle partitions / scan split size / AQE toggle for ``sf_dir`` and
-    installs them via :func:`set_conf_overrides` so no later
-    ``configure()`` can clobber them. Returns the applied dict so the
-    harness can record what actually ran.
-    """
+    """Set the three input-sized bench confs for ``sf_dir`` on ``spark``:
+    shuffle partitions, scan split size and the AQE toggle. One call per
+    (session, fixture) switch in a bench harness; returns the applied dict
+    so the harness can record what actually ran."""
     confs = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions_for(sf_dir)),
         "spark.sql.files.maxPartitionBytes": max_partition_bytes_for(sf_dir),
         "spark.sql.adaptive.enabled": adaptive_for(sf_dir),
     }
-    set_conf_overrides(spark, confs)
+    session_state(spark)  # first sight now, so SESSION_CONF cannot undo these later
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     return confs
 
 
-def get_spark(app: str = "engine", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or fetch) a local session sized for this machine.
-
-    ``shuffle_partitions`` defaults to the core count — on a real cluster
-    you would size it to ~2-3× total executor cores and let AQE coalesce.
+def get_spark(app: str = "engine") -> SparkSession:
+    """Build (or fetch) a local session sized from this host:
+    ``local[host_cores()]``, one shuffle partition per core and a
+    :func:`driver_heap` driver heap. On a real cluster you would size
+    shuffle partitions to ~2-3× total executor cores and let AQE coalesce.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
-    b = (
+    cores = host_cores()
+    spark = (
         SparkSession.builder.appName(app)
-        .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # bench_compare materializes BOTH engines' results as pandas frames
-        # for timing symmetry; at sf100 win_sessionize's ~100M-row result is
-        # >1 GiB of Arrow batches and the 1 GiB default kills the collect.
-        # Scoped to the harness that needs it (ADVICE r06): only honored
-        # when SPARK_GRAFT_MAX_RESULT is set (bench_compare sets 16g);
-        # engine/driver-gate sessions keep the 1g driver-OOM guard.
-        # Startup-only conf — ignored if getOrCreate reuses a session.
+        .master(f"local[{cores}]")
+        .config("spark.driver.memory", driver_heap())
+        # Only bench_compare (which sets SPARK_GRAFT_MAX_RESULT=16g) needs
+        # more: it materializes both engines' results as pandas frames, and
+        # at sf100 win_sessionize's result is >1 GiB of Arrow batches.
+        # Every other session keeps the 1g driver-OOM guard. Startup-only.
         .config(
             "spark.driver.maxResultSize",
             os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
         )
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    for k, v in SESSION_CONF.items():
-        b = b.config(k, v)
-    return configure(b.getOrCreate())
-
-
-#: session → {sf_dir → table dict}. DataFrames are immutable lazy plans,
-#: so caching is safe; it removes ~0.5-1 s of per-query footer reads + view
-#: registration (measured part of the local job floor). Weakly keyed by
-#: the session (r10, VERDICT r09 item 7 — third strike of the id()-reuse
-#: hazard class): an id()-keyed dict is never evicted, so a new session
-#: allocated at a dead session's address would inherit DataFrames bound
-#: to a dead JVM session. HONEST SCOPE (r11, ADVICE r10): the cached
-#: DataFrames strongly reference their session, so entries are never
-#: actually evicted — this is safety-via-PINNING, not weak eviction (the
-#: documented WeakKeyDictionary value→key caveat). A cached session is
-#: kept alive for process life, so its id can never be reused by a new
-#: session; the cost is that every session ever cached keeps its JVM
-#: state until exit. Acceptable here: bench/tests/driver create 1-2
-#: sessions per process; a long-lived multi-session server would want
-#: an explicit cache.clear() on session stop instead.
-_tables_cache: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
-_views_current: "weakref.WeakKeyDictionary[SparkSession, str]" = (
-    weakref.WeakKeyDictionary()
-)
+    session_state(spark)
+    return spark
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -345,40 +341,35 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         integer division, identical to DuckDB's ``CAST(ts AS TIMESTAMP)``.
       - ``ts_ns``: the original raw int64 nanoseconds, for ops that need
         full precision (sessionization windows use epoch arithmetic).
-    Also registers each table as a temp view ``<name>`` for the SQL entry
-    point (SURVEY §3.2). Cached per (session, sf_dir).
+    Also points the temp view ``<name>`` of each table at ``sf_dir`` for
+    the SQL entry point (SURVEY §3.2). Cached per (session, sf_dir): a
+    hit saves ~0.5-1 s of footer reads and view registration.
     """
-    per_session = _tables_cache.setdefault(spark, {})
-    cached = per_session.get(sf_dir)
-    if cached is not None:
-        # temp views must track the ACTIVE sf_dir (SQL-path queries read
-        # them); re-register only when this session last pointed elsewhere
-        if _views_current.get(spark) != sf_dir:
-            for name, df in cached.items():
-                df.createOrReplaceTempView(name)
-            _views_current[spark] = sf_dir
-        return cached
-    configure(spark)
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        if name == "events":
-            if isinstance(df.schema["ts"].dataType, T.LongType):
-                # driver fixture: raw INT64 ns (nanosAsLong) → truncate to µs
-                df = df.withColumn("ts_ns", F.col("ts").cast("long")).withColumn(
-                    "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
-                )
-            else:
-                # already a timestamp (e.g. re-materialized scaled data):
-                # derive ns from µs — same downstream columns either way
-                df = df.withColumn(
-                    "ts_ns", F.unix_micros(F.col("ts").cast("timestamp")) * 1000
-                ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        out[name] = df
-        df.createOrReplaceTempView(name)
-    per_session[sf_dir] = out
-    _views_current[spark] = sf_dir
-    return out
+    rec = session_state(spark)
+    tables = rec.tables.get(sf_dir)
+    if tables is None:
+        tables = rec.tables[sf_dir] = {n: _read_table(spark, sf_dir, n) for n in TABLES}
+    if rec.views != sf_dir:
+        for name, df in tables.items():
+            df.createOrReplaceTempView(name)
+        rec.views = sf_dir
+    return tables
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name != "events":
+        return df
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        # driver fixture: raw INT64 ns (nanosAsLong) → truncate to µs
+        return df.withColumn("ts_ns", F.col("ts").cast("long")).withColumn(
+            "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
+        )
+    # already a timestamp (e.g. re-materialized scaled data): derive ns
+    # from µs — same downstream columns either way
+    return df.withColumn(
+        "ts_ns", F.unix_micros(F.col("ts").cast("timestamp")) * 1000
+    ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
@@ -422,10 +413,9 @@ _CSV_SCHEMA = T.StructType(
 #: writes here, the DuckDB oracle reads the SAME files back (the driver
 #: runs the Spark query first; the oracle SQL strings embed this path and
 #: are built in the same process, so writer and reader always agree).
-#: Per-PID since r03: a fixed path let two concurrent harness processes
-#: (e.g. the test suite and a verify script) overwrite each other's
-#: handoff mid-read — an environment-only hazard, but cheap to remove.
-#: atexit cleanup keeps /tmp bounded (r01 ADVICE).
+#: Per-PID, so two concurrent harness processes (e.g. the test suite and
+#: a verify script) cannot overwrite each other's handoff mid-read;
+#: atexit cleanup keeps /tmp bounded.
 _SCAN_ORACLE_DIR = f"/tmp/engine_scan_oracle_{os.getpid()}"
 
 
@@ -579,7 +569,7 @@ def bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     creating it on first use (sorted by the key — pay the shuffle once at
     write time, never again). Shared by ``sink_bucketed_join`` (the
     mechanism demo) and ``agg_revenue_by_nation_bucketed`` (the flagship
-    wired to it, VERDICT r06 item 2), so one layout serves every orderkey
+    wired to it), so one layout serves every orderkey
     join.
 
     The bucket count is INPUT-SIZED via :func:`shuffle_partitions_for`
@@ -614,11 +604,8 @@ def bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
             # Files from an earlier process are complete on disk: the
             # catalog entry died with that session, so RE-REGISTER the
             # external bucketed table over them instead of re-shuffling
-            # and rewriting the whole fact. Before r08 this path used
-            # tableExists alone, so every fresh process silently paid
-            # the full layout build again — at sf100 that is a ~30 GB
-            # shuffle + 11 GB rewrite per process (it filled the disk
-            # twice in the r08 measurement sessions). The DDL carries
+            # and rewriting the whole fact — at sf100 a rebuild is a
+            # ~30 GB shuffle + 11 GB rewrite per process. The DDL carries
             # the same CLUSTERED/SORTED spec the writer used, so the
             # bucketed-scan plan (zero-Exchange SMJ) is identical.
             cols = ", ".join(
@@ -655,13 +642,12 @@ def sorted_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem read from an ingest-sorted layout (sorted on
     ``l_shipdate`` WITHIN each input split, small row groups), creating
     it on first use — the layout twin of :func:`bucketed_facts`, serving
-    the scan-bound date-filtered shape (``agg_pricing_summary_sorted``,
-    VERDICT r07 item 1).
+    the scan-bound date-filtered shape (``agg_pricing_summary_sorted``).
 
     Why layout and not conf: Q1's pushed ``l_shipdate <= cutoff`` filter
     keeps ~83% of rows, and on the arrival-ordered fixture EVERY row
     group's [min,max] straddles the cutoff — the pushed min/max predicate
-    prunes nothing, so both scan-conf levers were measured useless (r07).
+    prunes nothing, so both scan-conf levers were measured useless.
 
     Why ``sortWithinPartitions`` and NOT ``repartitionByRange``:
     row-group skipping needs only WITHIN-FILE order — a file whose rows
@@ -669,9 +655,9 @@ def sorted_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     of row groups entirely above the cutoff are footer-skipped whether
     or not files cover disjoint global ranges. Dropping the range
     exchange makes the layout build a MAP-ONLY rewrite: zero shuffle at
-    ANY scale (the first r08 build attempt range-shuffled 600M rows at
-    sf100 and its ~30 GB of shuffle files filled the disk before the
-    11 GB output — the map-only form peaks at input+output). At 100 TB
+    ANY scale (a range-shuffled build of 600M rows at sf100 writes ~30 GB
+    of shuffle files before the 11 GB output — the map-only form peaks at
+    input+output). At 100 TB
     this is the difference between an ingest-time rewrite that costs
     one pass and a cluster-wide sort; global range layout remains worth
     its shuffle only when file-level pruning or range-colocated joins
@@ -683,8 +669,7 @@ def sorted_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity IS the row group, so the layout must create ≥tens of
     them regardless of fixture size (a fixed 16 MB block left the whole
     sf0.01 table in ONE group). Cost: a few extra footer entries per
-    file, noise against the 17% I/O win (measured A/B in BENCH.md
-    r08)."""
+    file, noise against the 17% I/O win (measured A/B in BENCH.md)."""
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     block = max(256 * 1024, min(16 * 1024 * 1024, (_dir_bytes(sf_dir) or 0) // 64))
     # fixed path, content deterministic per (sf, layout shape v2): a

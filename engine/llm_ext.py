@@ -22,23 +22,11 @@ from pyspark.sql import functions as F
 
 from engine.io import load_tables
 from engine.registry import query
+from engine.similarity import _dbl, _dot
 
 _K = 8
 _ITERS = 3
 _DIM = 64
-
-
-def _dbl(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    """Index-ordered fold — matches DuckDB's list_dot_product order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def kmeans_cte_parts(k: int, iters: int, source: str = "embeddings") -> list[str]:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.io import load_tables
+from engine.io import load_tables, scoped_conf
 from engine.registry import query
 
 # ---------------------------------------------------------------------------
@@ -2237,6 +2237,17 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: join_bloom_prefilter's demo confs. The application-side threshold is
+#: lowered because local data is far under the 10 GB default, and
+#: auto-broadcast is off because Bloom injection is skipped for
+#: broadcast-able joins (a broadcast join already avoids shuffling the
+#: big side). tests/test_plans.py plans under the same confs.
+BLOOM_DEMO_CONFS = {
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
 @query(
     "join_bloom_prefilter",
     oracle="""
@@ -2255,41 +2266,27 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the difference between shuffling the whole fact
     table and shuffling the ~selectivity fraction that can match; the
     exact join still runs after, so false positives cost nothing but
-    bytes (SQL oracle is exact). The application-side size threshold is
-    lowered for the demo (local data is far under the 10 GB default) and
-    restored after materialization; tests/test_plans.py asserts the
+    bytes (SQL oracle is exact). The demo confs (``BLOOM_DEMO_CONFS``)
+    are scoped to the materialization; tests/test_plans.py asserts the
     injected `might_contain`."""
     t = load_tables(spark, sf_dir)
-    # Bloom injection is skipped for broadcast-able joins (a broadcast
-    # join already avoids shuffling the big side), so the demo also
-    # disables auto-broadcast — both confs restored after materialization.
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        o = t["orders"].where(F.col("o_orderpriority") == "1-URGENT")
-        df = (
-            t["lineitem"]
-            .hint("merge")
-            .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                    "revenue"
-                ),
-            )
+    o = t["orders"].where(F.col("o_orderpriority") == "1-URGENT")
+    df = (
+        t["lineitem"]
+        .hint("merge")
+        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_items"),
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+                "revenue"
+            ),
         )
-        # materialize under the lowered threshold so the bloom actually
-        # runs, then restore — the confs must not leak into other queries
+    )
+    # materialize under the lowered threshold so the bloom actually runs;
+    # the confs must not leak into other queries
+    with scoped_conf(spark, BLOOM_DEMO_CONFS):
         return df.localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 @query(

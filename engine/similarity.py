@@ -80,10 +80,14 @@ def _lsh_salts(n: int) -> int:
 
 
 def _dbl(col):
+    """Element-wise cast of an embedding array to double."""
     return F.transform(col, lambda x: x.cast("double"))
 
 
 def _dot(a, b):
+    """Dot product as an index-ordered left fold (((0 + a0·b0) + a1·b1) + …),
+    the summation order of DuckDB's ``list_dot_product``, so both engines
+    produce bit-identical doubles. Shared by every vector key."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
@@ -570,9 +574,11 @@ def ivf_parts(
     clustered evidence key (engine/ann_clustered.py). Returns the named
     intermediates so callers can add recall/scan accounting: `ev`
     (non-zero corpus with norms), `q` (queries), `scored` (probed
-    candidates), `mine` (the top-3 result). Expression trees are
-    byte-identical to the pre-refactor llm_ann_ivf body, so the
-    driver-green hash of the base key is unchanged."""
+    candidates), `mine` (the top-3 result). The plan is NOT the
+    original inline llm_ann_ivf plan: the intermediates below are
+    checkpointed and the assignment uses a per-row argmin. Output
+    equality rests on the oracle hash check of both keys, not on plan
+    identity."""
     from engine.llm_ext import lloyd_fit
 
     # Within-run lineage truncation (r12, guide §5 — the pq_parts ev
@@ -1048,110 +1054,100 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    (shrinking) 16 B/row edge list — ~1M edges per reduce partition
     #    is the 100 TB doctrine (§2.2: 100 MB-1 GB per partition) applied
     #    to rows this narrow, and it holds at any scale because the count
-    #    is re-derived per round from the measured n_edges. Restored in
-    #    the finally so no other key inherits the tail sizing; the final
-    #    labels evaluation (corpus-scaled, one row per clustered vector)
-    #    runs at the session's own partitioning.
-    #    NOTE (ADVICE r11): mutating the SESSION-global shuffle.partitions
-    #    mid-loop assumes the single-threaded bench/driver execution model
-    #    — a plan built/evaluated concurrently on the same SparkSession
-    #    while the loop runs would inherit the edge-sized (tiny) count.
-    #    Safe for every harness in this repo (one query at a time); a
-    #    concurrent deployment would repartition ec explicitly per round
-    #    instead of touching session conf.
-    conf = labels.sparkSession.conf
-    sess_parts = conf.get("spark.sql.shuffle.partitions")
-    try:
-        while True:
-            n_edges = ec.count()
-            if n_edges == 0:
-                break
-            if n_edges <= finish_threshold:
-                # residual supernode graph: driver union-find, component-min
-                # labels (identical fixpoint to running contraction to the end)
-                parent: dict = {}
+    #    is re-derived per round from the measured n_edges. The round's
+    #    grouping and dedup shuffles take that count through explicit
+    #    repartition(n, ...) calls, never through the session conf, so
+    #    no other query sees it; the final labels evaluation (corpus-
+    #    scaled, one row per clustered vector) runs at the session's own
+    #    partitioning.
+    sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    while True:
+        n_edges = ec.count()
+        if n_edges == 0:
+            break
+        if n_edges <= finish_threshold:
+            # residual supernode graph: driver union-find, component-min
+            # labels (identical fixpoint to running contraction to the end)
+            parent: dict = {}
 
-                def find(x: int) -> int:
-                    while parent.get(x, x) != x:
-                        parent[x] = parent.get(parent[x], parent[x])
-                        x = parent[x]
-                    return x
+            def find(x: int) -> int:
+                while parent.get(x, x) != x:
+                    parent[x] = parent.get(parent[x], parent[x])
+                    x = parent[x]
+                return x
 
-                for u, v in ec.collect():
-                    ru, rv = find(u), find(v)
-                    if ru != rv:
-                        # union by min so every root IS its component min
-                        lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                        parent[hi] = lo
-                fin = [(x, find(x)) for x in list(parent)]
-                fmap = labels.sparkSession.createDataFrame(
-                    fin, "lbl_in: long, lbl_out: long"
-                )
-                labels = labels.join(
-                    F.broadcast(fmap), labels["lbl"] == fmap["lbl_in"], "left"
-                ).select(
-                    labels["id"], F.coalesce(fmap["lbl_out"], labels["lbl"]).alias("lbl")
-                )
-                break
-            rounds += 1
-            conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(1, min(int(sess_parts), n_edges // 1_000_000 + 1))),
-            )
-            sym = ec.unionByName(
-                ec.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            # min over the closed neighborhood of each (super)node, shared
-            # by the three consumers below (checkpoint: see loop note)
-            mins = (
-                sym.groupBy("u")
-                .agg(F.min("v").alias("m"))
-                .select("u", F.least("u", "m").alias("m"))
-                .localCheckpoint(eager=True)
-            )
-            # mins is materialized, so its row count is a cheap metadata
-            # job — when the (supernode → new label) map fits comfortably
-            # in a broadcast (≤1M rows ≈ 16 MB), hint it on all three
-            # joins below: the labels chain and the edge rewrite then
-            # probe map-side instead of sort-merge-shuffling their big
-            # side per round. Guarded by the MEASURED count (never by the
-            # corpus), so at scale early rounds shuffle and only the
-            # shrunken tail broadcasts — the AQE decision, made with real
-            # numbers at any scale (AQE itself is input-size-gated off on
-            # the small fixtures).
-            bcast_map = mins.count() <= 1_000_000
-            hint = F.broadcast if bcast_map else (lambda df: df)
-            # original vertices follow their supernode's new label; nodes whose
-            # supernode already finished (isolated → absent from ec/mins) keep
-            # their final label via the left join's coalesce. Unique column
-            # names + by-name resolution: the lazy labels chain holds every
-            # prior round's mins subtree, so positional DataFrame["col"]
-            # references trip the ambiguous-self-join detector here.
-            lblmap = hint(
-                mins.select(F.col("u").alias("_lu"), F.col("m").alias("_lm"))
+            for u, v in ec.collect():
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    # union by min so every root IS its component min
+                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
+                    parent[hi] = lo
+            fin = [(x, find(x)) for x in list(parent)]
+            fmap = labels.sparkSession.createDataFrame(
+                fin, "lbl_in: long, lbl_out: long"
             )
             labels = labels.join(
-                lblmap, F.col("lbl") == F.col("_lu"), "left"
-            ).select(F.col("id"), F.coalesce(F.col("_lm"), F.col("lbl")).alias("lbl"))
-            if rounds % 8 == 0:  # bound the lazy join chain on deep graphs
-                labels = labels.localCheckpoint(eager=True)
-            # contract: rewrite edges through the new labels; duplicates
-            # collapse and self-loops vanish, so |ec| is non-increasing and
-            # components merge geometrically
-            mu = hint(mins.select(F.col("u").alias("u"), F.col("m").alias("mu")))
-            mv = hint(mins.select(F.col("u").alias("v"), F.col("m").alias("mv")))
-            ec = (
-                ec.join(mu, "u")
-                .join(mv, "v")
-                .select(
-                    F.least("mu", "mv").alias("u"), F.greatest("mu", "mv").alias("v")
-                )
-                .where(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=True)
+                F.broadcast(fmap), labels["lbl"] == fmap["lbl_in"], "left"
+            ).select(
+                labels["id"], F.coalesce(fmap["lbl_out"], labels["lbl"]).alias("lbl")
             )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", sess_parts)
+            break
+        rounds += 1
+        n = max(1, min(sess_parts, n_edges // 1_000_000 + 1))
+        sym = ec.unionByName(
+            ec.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        # min over the closed neighborhood of each (super)node, shared
+        # by the three consumers below (checkpoint: see loop note)
+        mins = (
+            sym.repartition(n, "u")
+            .groupBy("u")
+            .agg(F.min("v").alias("m"))
+            .select("u", F.least("u", "m").alias("m"))
+            .localCheckpoint(eager=True)
+        )
+        # mins is materialized, so its row count is a cheap metadata
+        # job — when the (supernode → new label) map fits comfortably
+        # in a broadcast (≤1M rows ≈ 16 MB), hint it on all three
+        # joins below: the labels chain and the edge rewrite then
+        # probe map-side instead of sort-merge-shuffling their big
+        # side per round. Guarded by the MEASURED count (never by the
+        # corpus), so at scale early rounds shuffle and only the
+        # shrunken tail broadcasts — the AQE decision, made with real
+        # numbers at any scale (AQE itself is input-size-gated off on
+        # the small fixtures).
+        bcast_map = mins.count() <= 1_000_000
+        hint = F.broadcast if bcast_map else (lambda df: df)
+        # original vertices follow their supernode's new label; nodes whose
+        # supernode already finished (isolated → absent from ec/mins) keep
+        # their final label via the left join's coalesce. Unique column
+        # names + by-name resolution: the lazy labels chain holds every
+        # prior round's mins subtree, so positional DataFrame["col"]
+        # references trip the ambiguous-self-join detector here.
+        lblmap = hint(
+            mins.select(F.col("u").alias("_lu"), F.col("m").alias("_lm"))
+        )
+        labels = labels.join(
+            lblmap, F.col("lbl") == F.col("_lu"), "left"
+        ).select(F.col("id"), F.coalesce(F.col("_lm"), F.col("lbl")).alias("lbl"))
+        if rounds % 8 == 0:  # bound the lazy join chain on deep graphs
+            labels = labels.localCheckpoint(eager=True)
+        # contract: rewrite edges through the new labels; duplicates
+        # collapse and self-loops vanish, so |ec| is non-increasing and
+        # components merge geometrically
+        mu = hint(mins.select(F.col("u").alias("u"), F.col("m").alias("mu")))
+        mv = hint(mins.select(F.col("u").alias("v"), F.col("m").alias("mv")))
+        ec = (
+            ec.join(mu, "u")
+            .join(mv, "v")
+            .select(
+                F.least("mu", "mv").alias("u"), F.greatest("mu", "mv").alias("v")
+            )
+            .where(F.col("u") != F.col("v"))
+            .repartition(n, "u", "v")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
     # telemetry, not result: round count is the quantity that regresses if
     # a bigger corpus produces deeper dup chains (bench.py reports it, the
     # oracle-compared schema stays unchanged)
@@ -1451,7 +1447,11 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # order preserves ida < idb) with O(B²) transient memory;
         # measured 138 → 9.9 s warm min at sf10, identical output
         # (exceptAll = 0), no measurable change at sf0.1 where every
-        # cell fits one block.
+        # cell fits one block. That equivalence is margin-based, not
+        # bit-guaranteed: the tiles feed BLAS other matrix shapes, and
+        # another BLAS build may sum in another order, so a cosine lying
+        # within ~1e-15 of tau could flip. The smallest margin observed
+        # on these fixtures is 2.8e-7, far above that noise.
         B = 2048
         cell0 = tbl.column("cell")[0].as_py()
         out_a: list[np.ndarray] = []

@@ -25,32 +25,23 @@ import itertools
 import os
 import tempfile
 import time
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.cdc import dedup_extract
-from engine.io import load_tables
+from engine.io import load_tables, session_state
 from engine.io import tmpdir as io_tmpdir
 from engine.registry import query
 
 _uid = itertools.count()
-# weakly keyed by the session (r09, VERDICT r08 item 8): an id()-keyed
-# dict is never evicted, so a new session allocated at a dead session's
-# address would inherit its entries — same hazard class the r08 ADVICE
-# flagged for conf overrides (harmless here only because the content is
-# deterministic per sf_dir; fixed for consistency with that pattern)
-_stream_input_cache: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def _events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write normalized events as 4 time-ordered parquet files (cached per
     session+sf_dir). Files are written sequentially so modification-time
     order == event-time order (micro-batch simulation)."""
-    per_session = _stream_input_cache.setdefault(spark, {})
+    per_session = session_state(spark).stream_inputs
     cached = per_session.get(sf_dir)
     if cached is not None and os.path.isdir(cached):
         return cached

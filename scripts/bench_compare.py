@@ -70,9 +70,6 @@ def main() -> None:
     # never spends (measured: win_sessionize sf1 = 1.0 s to a noop sink,
     # 7.8 s to .collect(), 0.5 s to Arrow toPandas). Both engines now
     # land in a pandas DataFrame — symmetric materialization work.
-    # Input-sized shuffle/split/AQE registered as STICKY overrides so the
-    # first load_tables cache miss can't re-apply SESSION_CONF over them
-    # (the r06 AQE-toggle no-op — ADVICE r06, high).
     bench_confs = apply_bench_confs(spark, sf_dir)
     print(f"confs: {bench_confs}", file=sys.stderr)
 

@@ -59,7 +59,7 @@ def main() -> None:
     from pyspark.sql.streaming import StreamingQueryListener
 
     from engine import registry
-    from engine.io import shuffle_partitions_for
+    from engine.io import host_cores, shuffle_partitions_for
 
     registry.load_all()
     from engine.streaming import stream_stream_join_plan
@@ -67,7 +67,7 @@ def main() -> None:
     parts = shuffle_partitions_for(sf_dir)
     spark = (
         SparkSession.builder.appName(f"heap_witness_{provider}_{heap}")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .master(f"local[{host_cores()}]")
         .config("spark.driver.memory", heap)
         .config("spark.sql.shuffle.partitions", str(parts))
         .config("spark.sql.streaming.stateStore.providerClass", PROVIDERS[provider])

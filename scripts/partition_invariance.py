@@ -30,7 +30,8 @@ def main() -> None:
     from tests.oracle import compare
 
     registry.load_all()
-    spark = get_spark(app=f"partinv-{n}", shuffle_partitions=n)
+    spark = get_spark(app=f"partinv-{n}")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     spark.sparkContext.setLogLevel("ERROR")
 
     failures = []

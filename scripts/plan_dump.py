@@ -25,7 +25,7 @@ def main() -> None:
     suffix = os.environ.get("PLAN_SUFFIX", "before")
 
     from engine import registry
-    from engine.io import apply_bench_confs, get_spark, shuffle_partitions_for
+    from engine.io import apply_bench_confs, get_spark
 
     registry.load_all()
     if not keys:
@@ -33,7 +33,7 @@ def main() -> None:
 
         keys = bench.HEADLINE + bench.EXTRA
 
-    spark = get_spark(app="plan_dump", shuffle_partitions=shuffle_partitions_for(sf_dir))
+    spark = get_spark(app="plan_dump")
     spark.sparkContext.setLogLevel("ERROR")
     apply_bench_confs(spark, sf_dir)
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Quick per-key timing loop for optimization work (guide §1.4).
 
-Usage: python scripts/time_key.py <key> [key ...] [--reps N]
+Usage: python scripts/time_key.py <key> [key ...] [--reps N | --reps=N]
 Times each key with the noop sink on a warmed bench-shaped session
 (input-sized confs, same as bench.py) and prints min/med/max. This is
 the inner loop for optimization A/Bs; the scored record stays bench.py.
@@ -16,32 +16,44 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
-    # consume `--reps N` pairs as well as `--reps=N` (ADVICE r11: the
-    # space form used to leave the value token in the key list, where it
-    # was looked up as a query key and raised KeyError)
-    argv = sys.argv[1:]
-    args: list[str] = []
+USAGE = "usage: python scripts/time_key.py <key> [key ...] [--reps N | --reps=N]"
+
+
+def parse_args(argv: list[str]) -> tuple[list[str], int]:
+    """Split ``argv`` into (keys, reps). ``--reps`` takes exactly one
+    positive integer, as ``--reps N`` or ``--reps=N``; anything else that
+    starts with ``--`` is an error. Exits with the usage message on a bad
+    command line."""
+    keys: list[str] = []
     reps = 5
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--reps"):
-            if "=" in a:
-                reps = int(a.split("=", 1)[1])
-            else:
-                i += 1
-                reps = int(argv[i])
+    it = iter(argv)
+    for a in it:
+        if a == "--reps":
+            value = next(it, None)
+        elif a.startswith("--reps="):
+            value = a.split("=", 1)[1]
+        elif a.startswith("--"):
+            sys.exit(f"unknown option {a!r}\n{USAGE}")
         else:
-            args.append(a)
-        i += 1
+            keys.append(a)
+            continue
+        if value is None or not value.isdigit() or int(value) < 1:
+            sys.exit(f"--reps needs a positive integer\n{USAGE}")
+        reps = int(value)
+    if not keys:
+        sys.exit(USAGE)
+    return keys, reps
+
+
+def main() -> None:
+    args, reps = parse_args(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from engine import registry
-    from engine.io import apply_bench_confs, get_spark, shuffle_partitions_for
+    from engine.io import apply_bench_confs, get_spark
 
     registry.load_all()
-    spark = get_spark(app="time_key", shuffle_partitions=shuffle_partitions_for(sf_dir))
+    spark = get_spark(app="time_key")
     spark.sparkContext.setLogLevel("ERROR")
     apply_bench_confs(spark, sf_dir)
     spark.range(1_000_000).count()  # JVM warm-up

@@ -12,7 +12,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from engine.io import get_spark
 
-    s = get_spark(app="engine-tests", shuffle_partitions=8)
+    s = get_spark(app="engine-tests")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
     s.stop()
 

@@ -151,17 +151,11 @@ def test_bloom_prefilter_injected(spark, sf_dir):
     lowered, the selective orders filter must inject a runtime Bloom
     filter (might_contain) into the lineitem side. Rebuilt here because
     the query fn restores the conf after materializing."""
-    from engine.io import load_tables
+    from engine.io import load_tables, scoped_conf
+    from engine.relational import BLOOM_DEMO_CONFS
     from pyspark.sql import functions as F
 
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, BLOOM_DEMO_CONFS):
         t = load_tables(spark, sf_dir)
         o = t["orders"].where(F.col("o_orderpriority") == "1-URGENT")
         df = (
@@ -175,9 +169,6 @@ def test_bloom_prefilter_injected(spark, sf_dir):
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
         assert "might_contain" in s, "runtime bloom filter not injected"
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def test_q3_pushes_both_date_filters(spark, sf_dir):
@@ -684,16 +675,13 @@ def test_plan_cache_is_prepared_statement_not_result_cache(spark):
 
 
 def test_session_caches_are_per_session(spark, sf_dir):
-    """r10 (VERDICT r09 item 7): the table cache and the prepared-plan
-    store are weakly keyed BY SESSION, so two live sessions must get
-    independent entries (the id()-keyed predecessors would also have
-    passed this for live sessions — the weakref part additionally
-    guarantees a dead session's slot can never be inherited, which is
-    untestable without forcing id reuse; this pins the keying contract
-    the fix rests on) and a second session's results must still be
-    correct, not borrowed plans bound to the first session."""
+    """The session record (tables, prepared plans) is keyed BY SESSION:
+    two live sessions get independent entries, and a second session's
+    results are correct, not borrowed plans bound to the first session.
+    Weak keying additionally guarantees a dead session's record can never
+    be inherited, which is untestable without forcing id reuse."""
     from engine import registry
-    from engine.io import load_tables
+    from engine.io import load_tables, session_state
 
     s2 = spark.newSession()
     t1 = load_tables(spark, sf_dir)
@@ -701,16 +689,28 @@ def test_session_caches_are_per_session(spark, sf_dir):
     assert t1["orders"] is not t2["orders"], "table cache leaked across sessions"
     # same session + same sf_dir still hits the cache (the whole point)
     assert load_tables(spark, sf_dir)["orders"] is t1["orders"]
+    r1, r2 = session_state(spark), session_state(s2)
+    assert r1 is not r2
+    assert r1.tables[sf_dir] is t1 and r2.tables[sf_dir] is t2
     # prepared-plan store: one entry per session for a plan_cache key
     fn = registry.QUERIES["cdc_snapshot_diff"]
     d1, d2 = fn(spark, sf_dir), fn(s2, sf_dir)
-    store = registry._plan_store
-    assert (sf_dir, "cdc_snapshot_diff") in store.get(spark, {})
-    assert (sf_dir, "cdc_snapshot_diff") in store.get(s2, {})
-    assert store[spark][(sf_dir, "cdc_snapshot_diff")] is not store[s2][
-        (sf_dir, "cdc_snapshot_diff")
-    ], "plan store leaked across sessions"
+    k = (sf_dir, "cdc_snapshot_diff")
+    assert k in r1.plans and k in r2.plans
+    assert r1.plans[k] is not r2.plans[k], "plan store leaked across sessions"
     assert d1.count() == d2.count() > 0
+
+
+def test_new_session_gets_session_conf_on_first_sight(spark, sf_dir):
+    """A session the engine has never seen gets every SESSION_CONF value
+    the first time it reaches the engine (here: load_tables)."""
+    from engine.io import SESSION_CONF, load_tables
+
+    s2 = spark.newSession()
+    for k in SESSION_CONF:
+        s2.conf.unset(k)
+    load_tables(s2, sf_dir)
+    assert {k: s2.conf.get(k) for k in SESSION_CONF} == SESSION_CONF
 
 
 def test_shuffle_partitions_tiers():
@@ -789,33 +789,41 @@ def test_adaptive_tier_boundaries():
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_conf_overrides_survive_configure(spark):
-    """The r06 AQE-toggle no-op (ADVICE r06, high): a bench harness sets
-    adaptive.enabled='false', then the first load_tables cache miss calls
-    configure(), which re-applies SESSION_CONF and silently turns AQE back
-    on before any timed rep. Overrides registered via set_conf_overrides
-    must WIN over SESSION_CONF on every configure() re-apply — this is
-    what makes the recorded bench confs the confs that actually ran."""
+def test_bare_conf_set_survives_load_tables_miss(spark):
+    """SESSION_CONF is applied once, when a session is first seen, so a
+    plain spark.conf.set made afterwards sticks: a load_tables cache miss
+    on a new sf_dir must not turn AQE back on (a bench harness that turns
+    AQE off must time AQE-off runs)."""
     from engine import io
 
     key = "spark.sql.adaptive.enabled"
     orig = spark.conf.get(key)
     try:
-        # a bare conf.set is clobbered (the r06 bug, kept as documentation)
         spark.conf.set(key, "false")
-        io.configure(spark)
-        assert spark.conf.get(key) == "true"
-        # an override survives configure()
-        io.set_conf_overrides(spark, {key: "false"})
-        assert spark.conf.get(key) == "false"
-        io.configure(spark)
-        assert spark.conf.get(key) == "false"
-        # and survives a load_tables cache miss (fresh sf_dir tuple key)
         io.load_tables(spark, "/root/testdata/sf0.001")
         assert spark.conf.get(key) == "false"
     finally:
-        io._conf_overrides.pop(spark, None)
         spark.conf.set(key, orig)
+
+
+def test_host_derived_resource_defaults(monkeypatch):
+    """With $SPARK_GRAFT_CPUS unset, cores are the CPUs this process may
+    run on and the driver heap fits in physical RAM (MemTotal)."""
+    import os
+
+    from engine.io import driver_heap, host_cores, shuffle_partitions_for
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cores = len(os.sched_getaffinity(0))
+    assert host_cores() == cores
+    assert shuffle_partitions_for("/nonexistent/path") == max(8, cores)
+    heap = driver_heap()
+    assert heap.endswith("m")
+    with open("/proc/meminfo") as f:
+        mem_kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    assert 0 < int(heap[:-1]) * 1024 <= mem_kib
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert host_cores() == 3
 
 
 def test_pagerank_fact_pass_runs_once(spark, sf_dir):

@@ -124,5 +124,5 @@ def test_dedup_clusters_distributed_rounds_match_driver_finish(spark, sf_dir, mo
     forced = {(r.vec_id, r.cluster_id) for r in key(spark, sf_dir).collect()}
     assert similarity.LAST_PROPAGATION_ROUNDS > 0, "forced path did not run rounds"
     assert forced == base
-    # the loop must restore the session's shuffle partitioning
+    # the loop sizes its rounds without touching the session conf
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
