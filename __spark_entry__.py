@@ -39,6 +39,15 @@ _PROMOTED_R13 = [
     # r13: queries no longer mutate session-global conf
     "llm_dedup_clusters",        # per-round repartition(n) instead of conf.set
     "join_bloom_prefilter",      # demo confs through io.scoped_conf
+    # r13: versioned foreachBatch snapshots read back with the schema written
+    "stream_cdc_pipeline",
+    "stream_txlog_sink",
+    "sink_foreachBatch_merge",
+    "stream_scd2_foreachbatch",
+    # r13: TxTable manifests record the schema; reads plan from it
+    "sink_txlog_acid",
+    "scan_txlog_snapshot_isolation",
+    "sink_txlog_conflict",
 ]
 
 

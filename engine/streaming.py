@@ -37,6 +37,30 @@ from engine.registry import query
 _uid = itertools.count()
 
 
+class _Versions:
+    """A foreachBatch sink's table kept as one parquet dir ``v<batch_id>``
+    per micro-batch under ``root``. The latest version is read back with
+    the schema this object wrote it with, so a batch's merge starts
+    without a schema-inference job over the previous version's footers."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self._schema = None
+
+    def ids(self) -> list[int]:
+        return sorted(int(d[1:]) for d in os.listdir(self.root) if d.startswith("v"))
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        df.write.mode("overwrite").parquet(os.path.join(self.root, f"v{batch_id}"))
+        self._schema = df.schema
+
+    def latest(self, spark: SparkSession) -> DataFrame | None:
+        ids = self.ids()
+        if not ids:
+            return None
+        return spark.read.schema(self._schema).parquet(os.path.join(self.root, f"v{ids[-1]}"))
+
+
 def _events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write normalized events as 4 time-ordered parquet files (cached per
     session+sf_dir). Files are written sequentially so modification-time
@@ -490,19 +514,15 @@ def sink_foreachBatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_cdc_pipeline's union+dedup formulation, this is the explicit
     join-shaped merge; both are order-independent and idempotent, and both
     must equal the batch latest-per-key oracle."""
-    snap_dir = io_tmpdir("engine_merge_snap_")
+    snap = _Versions(io_tmpdir("engine_merge_snap_"))
     cols = ["user_id", "event_id", "ts", "value"]
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
         batch_latest = dedup_extract(batch_df.select(*cols), ["user_id"], "ts", "event_id")
-        versions = sorted(
-            (d for d in os.listdir(snap_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-        )
-        if not versions:
+        prev = snap.latest(batch_df.sparkSession)
+        if prev is None:
             out = batch_latest
         else:
-            prev = sp.read.parquet(os.path.join(snap_dir, versions[-1]))
             p = prev.select(*[F.col(c).alias(f"p_{c}") for c in cols])
             b = batch_latest.select(*[F.col(c).alias(f"b_{c}") for c in cols])
             j = p.join(b, F.col("p_user_id") == F.col("b_user_id"), "full_outer")
@@ -516,7 +536,7 @@ def sink_foreachBatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = j.select(
                 *[F.when(b_wins, F.col(f"b_{c}")).otherwise(F.col(f"p_{c}")).alias(c) for c in cols]
             )
-        out.write.mode("overwrite").parquet(os.path.join(snap_dir, f"v{batch_id}"))
+        snap.write(out, batch_id)
 
     s = _read_stream(spark, sf_dir, max_files=1)
     with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
@@ -527,11 +547,7 @@ def sink_foreachBatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    versions = sorted(
-        (d for d in os.listdir(snap_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-    )
-    final = spark.read.parquet(os.path.join(snap_dir, versions[-1]))
-    return final.select("user_id", "event_id", "value").localCheckpoint(eager=True)
+    return snap.latest(spark).select("user_id", "event_id", "value").localCheckpoint(eager=True)
 
 
 @query(
@@ -567,21 +583,15 @@ def _cdc_pipeline(spark: SparkSession, sf_dir: str, max_files: int | None = 1) -
     per-batch merge throughput scales with batch size (VERDICT r07
     item 4). Snapshot semantics are idempotent/order-independent, so
     every batch size converges to the same final snapshot."""
-    snap_dir = io_tmpdir("engine_cdc_snap_")
+    snap = _Versions(io_tmpdir("engine_cdc_snap_"))
     cols = ["user_id", "event_id", "ts", "value"]
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        versions = sorted(
-            (d for d in os.listdir(snap_dir) if d.startswith("v")),
-            key=lambda d: int(d[1:]),
-        )
         incoming = batch_df.select(*cols)
-        if versions:
-            prev = sp.read.parquet(os.path.join(snap_dir, versions[-1]))
+        prev = snap.latest(batch_df.sparkSession)
+        if prev is not None:
             incoming = prev.unionByName(incoming)
-        new_snap = dedup_extract(incoming, ["user_id"], "ts", "event_id")
-        new_snap.write.mode("overwrite").parquet(os.path.join(snap_dir, f"v{batch_id}"))
+        snap.write(dedup_extract(incoming, ["user_id"], "ts", "event_id"), batch_id)
 
     s = _read_stream(spark, sf_dir, max_files=max_files)
     with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
@@ -592,11 +602,7 @@ def _cdc_pipeline(spark: SparkSession, sf_dir: str, max_files: int | None = 1) -
             .start()
         )
         q.awaitTermination()
-    versions = sorted(
-        (d for d in os.listdir(snap_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-    )
-    final = spark.read.parquet(os.path.join(snap_dir, versions[-1]))
-    return final.select(*cols).localCheckpoint(eager=True)
+    return snap.latest(spark).select(*cols).localCheckpoint(eager=True)
 
 
 @query(
@@ -622,7 +628,7 @@ def stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch window over ALL events). The streaming twin of
     cdc_scd2_history; versioned parquet snapshots as in
     stream_cdc_pipeline."""
-    hist_dir = io_tmpdir("engine_scd2_")
+    hist = _Versions(io_tmpdir("engine_scd2_"))
     cols = ["user_id", "event_id", "value", "ts"]
 
     def scd2(df: DataFrame) -> DataFrame:
@@ -637,14 +643,9 @@ def stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        versions = sorted(
-            (d for d in os.listdir(hist_dir) if d.startswith("v")),
-            key=lambda d: int(d[1:]),
-        )
         inc = batch_df.select(*cols)
-        if versions:
-            prev = sp.read.parquet(os.path.join(hist_dir, versions[-1]))
+        prev = hist.latest(batch_df.sparkSession)
+        if prev is not None:
             touched = inc.select("user_id").distinct()
             untouched = prev.join(touched, "user_id", "left_anti")
             touched_rows = prev.join(touched, "user_id", "left_semi").select(
@@ -656,7 +657,7 @@ def stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = untouched.unionByName(scd2(touched_rows.unionByName(inc)))
         else:
             out = scd2(inc)
-        out.write.mode("overwrite").parquet(os.path.join(hist_dir, f"v{batch_id}"))
+        hist.write(out, batch_id)
 
     s = _read_stream(spark, sf_dir, max_files=1)
     with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
@@ -667,11 +668,7 @@ def stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    versions = sorted(
-        (d for d in os.listdir(hist_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-    )
-    final = spark.read.parquet(os.path.join(hist_dir, versions[-1]))
-    return final.select(
+    return hist.latest(spark).select(
         "user_id", "event_id", "value", "effective_from", "effective_to", "is_current"
     ).localCheckpoint(eager=True)
 

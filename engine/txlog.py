@@ -11,7 +11,10 @@ parquet + JSON manifests:
 
 - A table is ``<path>/data/*.parquet`` plus ``<path>/_log/vNNNNN.json``;
   manifest v is the FULL file listing of version v (Iceberg-style
-  snapshot manifest — no log replay needed to read).
+  snapshot manifest — no log replay needed to read). It also records
+  the table schema as ``df.schema.json()`` (Delta's ``schemaString``),
+  so a read plans from the manifest alone, with no inference job over
+  the data files' footers.
 - Commits write the manifest to a temp name and publish it with
   ``os.link`` (create-exclusive: fails with EEXIST if the version
   already exists) — atomic on a POSIX filesystem AND mutually
@@ -46,6 +49,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from engine.io import load_tables
 from engine.registry import query
@@ -112,7 +116,13 @@ class TxTable:
     def ops(self) -> list[str]:
         return [self.manifest(v)["op"] for v in self.versions()]
 
-    def _commit(self, files: list[str], op: str, expected_version: int | None = None) -> int:
+    def _commit(
+        self,
+        files: list[str],
+        op: str,
+        expected_version: int | None = None,
+        schema: StructType | None = None,
+    ) -> int:
         """Publish a manifest with putIfAbsent semantics.
 
         ``expected_version`` pins the version this transaction's files
@@ -122,13 +132,18 @@ class TxTable:
         ``versions()`` and the link — the commit raises
         :class:`CommitConflict` instead of silently clobbering or
         blindly renumbering (a COW merge renumbered past a conflicting
-        commit would drop that commit's changes: the lost update)."""
+        commit would drop that commit's changes: the lost update).
+
+        ``schema`` is the schema the files were written with; a manifest
+        committed without one is read by inference."""
         version = (self.versions()[-1] + 1) if self.versions() else 0
         if expected_version is not None and version != expected_version:
             raise CommitConflict(
                 f"expected to commit v{expected_version} but latest is v{version - 1}"
             )
         doc = {"version": version, "op": op, "files": sorted(files)}
+        if schema is not None:
+            doc["schema"] = schema.json()
         fd, tmp = tempfile.mkstemp(dir=self.log_dir, suffix=".tmp")
         with os.fdopen(fd, "w") as fh:
             json.dump(doc, fh)
@@ -162,12 +177,26 @@ class TxTable:
     # -- table operations -------------------------------------------------
     def create(self, df: DataFrame, n_files: int = 4, note: str = "") -> int:
         op = "CREATE" + (f"#{note}" if note else "")
-        return self._commit(self._write_files(df, n_files, "base"), op)
+        return self._commit(self._write_files(df, n_files, "base"), op, schema=df.schema)
 
     def read(self, version: int | None = None) -> DataFrame:
-        v = self.versions()[-1] if version is None else version
-        files = [self._abs(f) for f in self.manifest(v)["files"]]
-        return self.spark.read.parquet(*files)
+        """The table at ``version`` (default: latest), planned from its
+        manifest: the files it lists, read with the schema it records.
+        Manifests written before the schema was recorded lack the field
+        and are read by inference."""
+        m = self.manifest(self.versions()[-1] if version is None else version)
+        reader = self.spark.read
+        if "schema" in m:
+            reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+        return reader.parquet(*[self._abs(f) for f in m["files"]])
+
+    def _merge_plan(self, updates: DataFrame, key: str) -> tuple[int, DataFrame]:
+        """The version a COW upsert targets (latest + 1) and that
+        version's rows: the latest snapshot anti-joined on the key,
+        unioned with the updates."""
+        base = self.versions()[-1]
+        cur = self.read(base)
+        return base + 1, cur.join(updates.select(key), key, "left_anti").unionByName(updates)
 
     def stage_merge(self, updates: DataFrame, key: str, n_files: int = 4) -> tuple[int, list[str]]:
         """Derive + land a COW upsert's data files WITHOUT committing.
@@ -178,10 +207,7 @@ class TxTable:
         expected_version=target_version)`` is the write phase, and a
         :class:`CommitConflict` there means the snapshot went stale and
         the merge must be re-staged from the new latest."""
-        base = self.versions()[-1]
-        cur = self.read(base)
-        merged = cur.join(updates.select(key), key, "left_anti").unionByName(updates)
-        target = base + 1
+        target, merged = self._merge_plan(updates, key)
         return target, self._write_files(merged, n_files, f"merge_v{target}")
 
     def merge(
@@ -205,25 +231,24 @@ class TxTable:
         at table granularity)."""
         op = "MERGE" + (f"#{note}" if note else "")
         for _ in range(max_retries + 1):
-            target, files = self.stage_merge(updates, key, n_files)
+            target, merged = self._merge_plan(updates, key)
+            files = self._write_files(merged, n_files, f"merge_v{target}")
             try:
-                return self._commit(files, op, expected_version=target)
+                return self._commit(files, op, expected_version=target, schema=merged.schema)
             except CommitConflict:
                 continue  # snapshot went stale: re-derive and rebase
         raise CommitConflict(f"merge lost {max_retries + 1} commit races; giving up")
 
     def delete(self, predicate, n_files: int = 4) -> int:
-        cur = self.read()
+        kept = self.read().where(~predicate)
         tag = f"delete_v{len(self.versions())}"
-        return self._commit(
-            self._write_files(cur.where(~predicate), n_files, tag), "DELETE"
-        )
+        return self._commit(self._write_files(kept, n_files, tag), "DELETE", schema=kept.schema)
 
     def optimize(self) -> int:
         """Compaction as a METADATA SWAP: same rows, one file."""
         cur = self.read()
         tag = f"optimize_v{len(self.versions())}"
-        return self._commit(self._write_files(cur, 1, tag), "OPTIMIZE")
+        return self._commit(self._write_files(cur, 1, tag), "OPTIMIZE", schema=cur.schema)
 
     def vacuum(self, retain_last: int, orphan_grace_sec: float = 86400.0) -> int:
         """Delete data files referenced by NO retained manifest; returns

@@ -39,25 +39,32 @@ Per-source lifecycle (exactly the reference's linear batch pipeline):
    op='I'; else diff against the newest snapshot STRICTLY BEFORE the
    run-date — never the run-date's own snapshot, so re-running a day is
    idempotent (it recomputes the original diff) instead of diffing the
-   extract against itself (ADVICE r09) — via snapshot_diff (full
-   extracts — full-outer join, I/U/D/N classification) or
-   incremental_upsert (delta extracts — I/U only, deletes undetectable
-   by definition);
-4. write the new current-state snapshot into a hidden staging dir and
+   extract against itself (ADVICE r09). The previous snapshot is this
+   job's own output, so it is read with the extract's schema, not by
+   inference. Full extracts: snapshot_diff (full-outer join, I/U/D/N
+   classification). Delta extracts (I/U only, deletes undetectable by
+   definition): the same snapshot_diff, persisted once and read by both
+   writes;
+4. append the non-N changelog rows (op, key_hash, values, run_date)
+   under ``<output_root>/<name>/changelog/run_date=<run-date>/``; the
+   per-op counts are observed during this write, not read back;
+5. write the new current-state snapshot into a hidden staging dir and
    publish it under ``<output_root>/<name>/snapshot/run_date=<run-date>/``
    by rename (never an in-place rewrite — a re-run of the day _LATEST
    names must not expose a half-written dir to pointer-resolving
    readers), then repoint ``<output_root>/<name>/_LATEST`` forward-only
    (a one-line pointer file — the pointer flips only after the full
    write succeeds, the same publish-then-point pattern as
-   engine/txlog.py);
-5. append the non-N changelog rows (op, key_hash, values, run_date)
-   under ``<output_root>/<name>/changelog/run_date=<run-date>/``.
+   engine/txlog.py).
 
 Every step is a lazy DataFrame plan; execution happens at the two
 writes, where Catalyst plans the shuffle join — on a 100 TB extract the
-full-outer diff is one key-partitioned shuffle per side and the
-changelog write is a filter over the same plan (no second diff).
+full-outer diff is one key-partitioned shuffle per side. On full days
+the changelog is a filter over the diff and the snapshot is the extract
+itself. On delta days the diff is persisted (and unpersisted once both
+writes are done): the changelog is its I/U rows and the snapshot its
+merged rows, so neither write runs a second diff (``_delta_day`` covers
+a previous snapshot that holds a key more than once).
 
 Exit code 0 and one JSON summary line per source on stdout:
 ``{"source": ..., "run_date": ..., "first_run": ..., "counts": {...}}``
@@ -71,16 +78,16 @@ import shutil
 import sys
 import time
 import uuid
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from engine.cdc import (
     SourceSpec,
     dedup_extract,
-    incremental_upsert,
     snapshot_diff,
     with_fingerprints,
 )
@@ -199,6 +206,105 @@ def _resolve_prev(root: str, name: str, run_date: str) -> str | None:
     return os.path.join(root, name, "snapshot", f"run_date={prior[-1]}")
 
 
+def _inserts(df: DataFrame, spec: SourceSpec) -> DataFrame:
+    """Changelog rows that classify every row of ``df`` as an insert."""
+    return with_fingerprints(df, spec).select(
+        F.lit("I").alias("op"), "key_hash", *spec.key_cols, *spec.tracked_cols
+    )
+
+
+def _delta_day(
+    diff: DataFrame,
+    curr: DataFrame,
+    spec: SourceSpec,
+    extract_rows: Observation,
+    log_dir: str,
+    run_date: str,
+) -> tuple[dict, DataFrame]:
+    """Write a delta day's changelog from ``diff``, the persisted
+    ``snapshot_diff(prev, curr)`` whose ``curr`` input was observed into
+    ``extract_rows``; return the changelog counts and the new snapshot.
+
+    - changelog: the diff's I/U rows. A row with a NULL key component is
+      always an I: the delta changelog classifies by presence among the
+      delta's keys with plain equality, under which NULL never matches.
+    - snapshot: the previous rows the delta does not touch (the diff's D
+      rows, matched null-safe) plus every extract row.
+
+    Both come from the diff alone when it pairs each extract row with at
+    most one previous row, which the observed row counts confirm after the
+    changelog write. When the previous snapshot holds a touched key more
+    than once (a delta with duplicate keys and no ``dedup`` config lands
+    them all), the diff repeats that extract row: the changelog is then
+    written again, and the snapshot built, from the diff and the extract."""
+    cols = [*spec.key_cols, *spec.tracked_cols]
+    op = F.col("op")
+    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in spec.key_cols])
+    paired = Observation("paired")
+    changes = (
+        diff.observe(paired, F.count(F.when(op != "D", True)).alias("rows"))
+        .where(op.isin("I", "U") | (null_key & (op == "N")))
+        .withColumn("op", F.when(null_key, F.lit("I")).otherwise(op))
+    )
+    counts = _write_changelog(changes, log_dir, run_date)
+    # no paired row means an empty extract: nothing to repeat, and the
+    # plan may have dropped the empty side, its observation with it
+    rows = paired.get["rows"]
+    if rows == 0 or rows == extract_rows.get["rows"]:
+        return counts, diff.select(*cols)
+    changes = diff.where(op.isin("I", "U") & ~null_key).unionByName(
+        _inserts(curr.where(null_key), spec)
+    )
+    counts = _write_changelog(changes, log_dir, run_date)
+    return counts, diff.where(op == "D").select(*cols).unionByName(curr)
+
+
+def _write_changelog(changes: DataFrame, log_dir: str, run_date: str) -> dict:
+    """Write the day's changelog (overwrite: a re-run is idempotent) and
+    return its per-op row counts, observed during the write itself."""
+    obs = Observation("changelog")
+    changes.withColumn("run_date", F.lit(run_date)).observe(
+        obs, *[F.count(F.when(F.col("op") == op, True)).alias(op) for op in ("I", "U", "D")]
+    ).write.mode("overwrite").parquet(log_dir)
+    return {op: n for op, n in obs.get.items() if n}
+
+
+def _publish_snapshot(new_snapshot: DataFrame, root: str, name: str, run_date: str) -> str:
+    """Write the day's snapshot and make it the one readers resolve.
+
+    The snapshot lands in a staging dir and is published by TWO renames,
+    never an in-place rewrite: on a RE-run of the day _LATEST already
+    names, an in-place overwrite would expose a half-written dir to every
+    reader resolving the pointer for the full duration of the Spark
+    write; the rename swap shrinks that window to two metadata ops (same
+    publish-then-point discipline as engine/txlog.py, one level down).
+    Staging dirs start with '.' so _snapshot_dates can never mistake one
+    for a complete snapshot."""
+    snap_dir = os.path.join(root, name, "snapshot", f"run_date={run_date}")
+    snap_parent = os.path.dirname(snap_dir)
+    staging = os.path.join(snap_parent, f".staging_{run_date}_{uuid.uuid4().hex[:8]}")
+    new_snapshot.write.mode("overwrite").parquet(staging)
+    displaced = None
+    if os.path.exists(snap_dir):
+        displaced = os.path.join(snap_parent, f".old_{run_date}_{uuid.uuid4().hex[:8]}")
+        os.rename(snap_dir, displaced)
+    os.rename(staging, snap_dir)
+    if displaced is not None:
+        shutil.rmtree(displaced, ignore_errors=True)
+    # publish-then-point: the pointer flips only after both writes landed,
+    # and only FORWARD — a re-run of an older date must not repoint
+    # readers backwards past days that already ran (run_date= prefixes
+    # are equal-length, so the basename comparison is a date comparison)
+    latest = _resolve_latest(root, name)
+    if latest is None or os.path.basename(latest) <= f"run_date={run_date}":
+        ptr = _latest_pointer(root, name)
+        tmp = ptr + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(snap_dir)
+        os.replace(tmp, ptr)
+    return snap_dir
+
+
 def run_source(spark: SparkSession, root: str, src: dict, run_date: str) -> dict:
     _sweep_stale_dirs(root, src["name"])
     spec = SourceSpec(
@@ -217,72 +323,35 @@ def run_source(spark: SparkSession, root: str, src: dict, run_date: str) -> dict
 
     prev_path = _resolve_prev(root, spec.name, run_date)
     first_run = prev_path is None
-    if first_run:
-        # first ever run: no previous snapshot → all rows are inserts
-        changes = with_fingerprints(curr, spec).select(
-            F.lit("I").alias("op"), "key_hash", *spec.key_cols, *spec.tracked_cols
-        )
-        new_snapshot = curr
-    else:
-        prev = spark.read.parquet(prev_path).select(*spec.key_cols, *spec.tracked_cols)
-        if spec.extract_type == "full":
-            diff = snapshot_diff(prev, curr, spec)
-            changes = diff.where(F.col("op") != "N")
+    log_dir = os.path.join(root, spec.name, "changelog", f"run_date={run_date}")
+    diff = None
+    try:
+        if first_run:
+            # first ever run: no previous snapshot → all rows are inserts
+            counts = _write_changelog(_inserts(curr, spec), log_dir, run_date)
             new_snapshot = curr
         else:
-            # delta feed: deletes undetectable; snapshot = upsert, and the
-            # changelog classifies each delta row I/U by key presence.
-            # ONE diff plan serves both (the delta rows are `curr` here),
-            # restricted to keys present in the delta so untouched rows
-            # never produce phantom D/N entries.
-            new_snapshot = incremental_upsert(prev, curr, spec)
-            prev_touched = prev.join(
-                curr.select(*spec.key_cols).distinct(), list(spec.key_cols), "left_semi"
-            )
-            diff = snapshot_diff(prev_touched, curr, spec)
-            changes = diff.where(F.col("op").isin("I", "U"))
-
-    snap_dir = os.path.join(root, spec.name, "snapshot", f"run_date={run_date}")
-    log_dir = os.path.join(root, spec.name, "changelog", f"run_date={run_date}")
-    changes = changes.withColumn("run_date", F.lit(run_date))
-    changes.write.mode("overwrite").parquet(log_dir)  # idempotent re-run
-    # Snapshot lands in a staging dir and is published by TWO renames,
-    # never an in-place rewrite: on a RE-run of the day _LATEST already
-    # names, an in-place overwrite would expose a half-written dir to
-    # every reader resolving the pointer for the full duration of the
-    # Spark write; the rename swap shrinks that window to two metadata
-    # ops (same publish-then-point discipline as engine/txlog.py, one
-    # level down). Staging dirs start with '.' so _snapshot_dates can
-    # never mistake one for a complete snapshot.
-    snap_parent = os.path.dirname(snap_dir)
-    staging = os.path.join(snap_parent, f".staging_{run_date}_{uuid.uuid4().hex[:8]}")
-    new_snapshot.write.mode("overwrite").parquet(staging)
-    displaced = None
-    if os.path.exists(snap_dir):
-        displaced = os.path.join(snap_parent, f".old_{run_date}_{uuid.uuid4().hex[:8]}")
-        os.rename(snap_dir, displaced)
-    os.rename(staging, snap_dir)
-    if displaced is not None:
-        shutil.rmtree(displaced, ignore_errors=True)
-    # publish-then-point: the pointer flips only after both writes landed,
-    # and only FORWARD — a re-run of an older date must not repoint
-    # readers backwards past days that already ran (run_date= prefixes
-    # are equal-length, so the basename comparison is a date comparison)
-    latest = _resolve_latest(root, spec.name)
-    if latest is None or os.path.basename(latest) <= f"run_date={run_date}":
-        ptr = _latest_pointer(root, spec.name)
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(snap_dir)
-        os.replace(tmp, ptr)
-
-    counts = {
-        r["op"]: r["n"]
-        for r in spark.read.parquet(log_dir)
-        .groupBy("op")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
+            # the previous snapshot is this job's own output, written from
+            # the same key and tracked columns: read it with curr's schema
+            # instead of running an inference job over its footers
+            prev = spark.read.schema(curr.schema).parquet(prev_path)
+            if spec.extract_type == "full":
+                changes = snapshot_diff(prev, curr, spec).where(F.col("op") != "N")
+                counts = _write_changelog(changes, log_dir, run_date)
+                new_snapshot = curr
+            else:
+                # delta feed: deletes undetectable; both outputs come from
+                # one persisted diff
+                extract_rows = Observation("extract")
+                observed = curr.observe(extract_rows, F.count(F.lit(1)).alias("rows"))
+                diff = snapshot_diff(prev, observed, spec).persist()
+                counts, new_snapshot = _delta_day(
+                    diff, curr, spec, extract_rows, log_dir, run_date
+                )
+        snap_dir = _publish_snapshot(new_snapshot, root, spec.name, run_date)
+    finally:
+        if diff is not None:
+            diff.unpersist()
     return {
         "source": spec.name,
         "run_date": run_date,

@@ -20,9 +20,11 @@ import sys
 import tempfile
 import textwrap
 import threading
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from engine.io import load_tables
 from engine.txlog import CommitConflict, TxTable
@@ -203,6 +205,50 @@ def test_vacuum_safe_under_alternate_path_spelling(spark, orders_small, tmp_path
     alias = TxTable(spark, str(link))
     assert alias.vacuum(retain_last=1, orphan_grace_sec=0.0) == 2
     assert t.read().count() == orders_small.count()
+
+
+def test_manifest_schema_round_trip(spark, orders_small, tmp_path):
+    """Every manifest records the schema its files were written with, and
+    read(version) plans from it: create, merge, read of each version and
+    vacuum all go through schema-carrying manifests, and planning a read
+    launches no Spark job (no inference over the data files' footers)."""
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    t.create(orders_small, n_files=2)
+    upd = orders_small.where(F.col("o_orderkey") % 3 == 0).withColumn(
+        "o_totalprice", F.col("o_totalprice") + 1
+    )
+    t.merge(upd, "o_orderkey", n_files=2)
+    base = {r.o_orderkey: r.o_totalprice for r in orders_small.collect()}
+    want = {
+        0: base,
+        1: {k: v + 1 if k % 3 == 0 else v for k, v in base.items()},
+    }
+    sc = spark.sparkContext
+    for v in t.versions():
+        recorded = StructType.fromJson(json.loads(t.manifest(v)["schema"]))
+        assert recorded.simpleString() == orders_small.schema.simpleString()
+        group = f"txlog_read_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            df = t.read(v)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert {r.o_orderkey: r.o_totalprice for r in df.collect()} == want[v]
+    assert t.vacuum(retain_last=1, orphan_grace_sec=0.0) == 2
+    assert {r.o_orderkey: r.o_totalprice for r in t.read().collect()} == want[1]
+
+
+def test_manifest_without_schema_reads_by_inference(spark, orders_small, tmp_path):
+    """A manifest written before tables recorded their schema has no
+    ``schema`` field; it must still read, by inference."""
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    t.create(orders_small, n_files=2)
+    with open(t._manifest_path(1), "w") as fh:
+        json.dump({"version": 1, "op": "OPTIMIZE", "files": t.manifest(0)["files"]}, fh)
+    got = t.read(1)
+    assert got.schema.simpleString() == orders_small.schema.simpleString()
+    assert sorted(got.collect()) == sorted(orders_small.collect())
 
 
 def test_two_process_commit_race(tmp_path):
