@@ -78,6 +78,19 @@ SESSION_CONF = {
     # (measured: 1.33 s vs 0.14 s executed for the same plan). 256 keeps
     # the JIT guard (hugeMethodLimit) while covering wide-agg shapes.
     "spark.sql.codegen.maxFields": "256",
+    # Streaming checkpoint files (offset WAL, commit log, state-store
+    # deltas) are committed by a plain FileSystem write-then-rename
+    # instead of Spark's default FileContext manager. The default's
+    # rename refuses to overwrite, which only matters when two writers
+    # race for one checkpoint; every engine checkpoint is a private temp
+    # dir of a single query, and Spark already falls back to this manager
+    # for object stores. One createAtomic call costs about 9 ms here
+    # against 35 ms for the default (local disk, 4-core host, via py4j),
+    # paid for each of the three metadata-log writes of every micro-batch.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

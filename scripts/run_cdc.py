@@ -48,23 +48,28 @@ Per-source lifecycle (exactly the reference's linear batch pipeline):
 4. append the non-N changelog rows (op, key_hash, values, run_date)
    under ``<output_root>/<name>/changelog/run_date=<run-date>/``; the
    per-op counts are observed during this write, not read back;
-5. write the new current-state snapshot into a hidden staging dir and
-   publish it under ``<output_root>/<name>/snapshot/run_date=<run-date>/``
+5. write the new current-state snapshot into a hidden staging dir. On a
+   first run or a full day this write runs on a second thread while
+   step 4's runs; on a delta day it follows step 4, as both read one
+   persisted diff. Only when both writes have succeeded is the snapshot
+   published under ``<output_root>/<name>/snapshot/run_date=<run-date>/``
    by rename (never an in-place rewrite — a re-run of the day _LATEST
    names must not expose a half-written dir to pointer-resolving
-   readers), then repoint ``<output_root>/<name>/_LATEST`` forward-only
-   (a one-line pointer file — the pointer flips only after the full
-   write succeeds, the same publish-then-point pattern as
-   engine/txlog.py).
+   readers), then ``<output_root>/<name>/_LATEST`` is repointed
+   forward-only (a one-line pointer file — the pointer flips only after
+   the full write succeeds, the same publish-then-point pattern as
+   engine/txlog.py). A failed write publishes nothing: the staging dir
+   is removed and the day's snapshot and pointer stay as they were.
 
 Every step is a lazy DataFrame plan; execution happens at the two
-writes, where Catalyst plans the shuffle join — on a 100 TB extract the
-full-outer diff is one key-partitioned shuffle per side. On full days
-the changelog is a filter over the diff and the snapshot is the extract
-itself. On delta days the diff is persisted (and unpersisted once both
-writes are done): the changelog is its I/U rows and the snapshot its
-merged rows, so neither write runs a second diff (``_delta_day`` covers
-a previous snapshot that holds a key more than once).
+writes — stage both, then publish — where Catalyst plans the shuffle
+join: on a 100 TB extract the full-outer diff is one key-partitioned
+shuffle per side. On full days the changelog is a filter over the diff
+and the snapshot is the extract itself. On delta days the diff is
+persisted (and unpersisted once both writes are done): the changelog is
+its I/U rows and the snapshot its merged rows, so neither write runs a
+second diff (``_delta_day`` covers a previous snapshot that holds a key
+more than once).
 
 Exit code 0 and one JSON summary line per source on stdout:
 ``{"source": ..., "run_date": ..., "first_run": ..., "counts": {...}}``
@@ -78,10 +83,12 @@ import shutil
 import sys
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -219,11 +226,12 @@ def _delta_day(
     spec: SourceSpec,
     extract_rows: Observation,
     log_dir: str,
+    staging: str,
     run_date: str,
-) -> tuple[dict, DataFrame]:
-    """Write a delta day's changelog from ``diff``, the persisted
-    ``snapshot_diff(prev, curr)`` whose ``curr`` input was observed into
-    ``extract_rows``; return the changelog counts and the new snapshot.
+) -> dict:
+    """Write a delta day's changelog and stage its snapshot from ``diff``,
+    the persisted ``snapshot_diff(prev, curr)`` whose ``curr`` input was
+    observed into ``extract_rows``; return the changelog counts.
 
     - changelog: the diff's I/U rows. A row with a NULL key component is
       always an I: the delta changelog classifies by presence among the
@@ -233,10 +241,15 @@ def _delta_day(
 
     Both come from the diff alone when it pairs each extract row with at
     most one previous row, which the observed row counts confirm after the
-    changelog write. When the previous snapshot holds a touched key more
-    than once (a delta with duplicate keys and no ``dedup`` config lands
-    them all), the diff repeats that extract row: the changelog is then
-    written again, and the snapshot built, from the diff and the extract."""
+    changelog write; only then is the diff's snapshot staged. The two
+    writes run in turn here: run together, each one's adaptive plan
+    would materialize the persisted diff in a job of its own (in turn,
+    the second finds it cached), one job more for no measured gain.
+    When the previous snapshot holds a touched key more than once (a
+    delta with duplicate keys and no ``dedup`` config lands them all),
+    the diff repeats that extract row: the changelog is then written
+    again and the snapshot staged from the diff and the extract, both
+    together, as the diff is cached by then."""
     cols = [*spec.key_cols, *spec.tracked_cols]
     op = F.col("op")
     null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in spec.key_cols])
@@ -251,12 +264,13 @@ def _delta_day(
     # plan may have dropped the empty side, its observation with it
     rows = paired.get["rows"]
     if rows == 0 or rows == extract_rows.get["rows"]:
-        return counts, diff.select(*cols)
+        _stage_snapshot(diff.select(*cols), staging)
+        return counts
     changes = diff.where(op.isin("I", "U") & ~null_key).unionByName(
         _inserts(curr.where(null_key), spec)
     )
-    counts = _write_changelog(changes, log_dir, run_date)
-    return counts, diff.where(op == "D").select(*cols).unionByName(curr)
+    snapshot = diff.where(op == "D").select(*cols).unionByName(curr)
+    return _write_day(changes, snapshot, log_dir, staging, run_date)
 
 
 def _write_changelog(changes: DataFrame, log_dir: str, run_date: str) -> dict:
@@ -269,21 +283,45 @@ def _write_changelog(changes: DataFrame, log_dir: str, run_date: str) -> dict:
     return {op: n for op, n in obs.get.items() if n}
 
 
-def _publish_snapshot(new_snapshot: DataFrame, root: str, name: str, run_date: str) -> str:
-    """Write the day's snapshot and make it the one readers resolve.
+def _stage_snapshot(snapshot: DataFrame, staging: str) -> None:
+    """Write the day's snapshot into its hidden staging dir."""
+    snapshot.write.mode("overwrite").parquet(staging)
 
-    The snapshot lands in a staging dir and is published by TWO renames,
-    never an in-place rewrite: on a RE-run of the day _LATEST already
-    names, an in-place overwrite would expose a half-written dir to every
-    reader resolving the pointer for the full duration of the Spark
-    write; the rename swap shrinks that window to two metadata ops (same
-    publish-then-point discipline as engine/txlog.py, one level down).
-    Staging dirs start with '.' so _snapshot_dates can never mistake one
-    for a complete snapshot."""
-    snap_dir = os.path.join(root, name, "snapshot", f"run_date={run_date}")
-    snap_parent = os.path.dirname(snap_dir)
-    staging = os.path.join(snap_parent, f".staging_{run_date}_{uuid.uuid4().hex[:8]}")
-    new_snapshot.write.mode("overwrite").parquet(staging)
+
+def _write_day(
+    changes: DataFrame, snapshot: DataFrame, log_dir: str, staging: str, run_date: str
+) -> dict:
+    """Stage ``snapshot`` on a second thread while the changelog is written
+    on this one; return the changelog counts.
+
+    The writes share no output, and on this job's small days each leaves
+    cores idle on its fixed per-job cost, so overlapping them shortens
+    the day. The thread target is wrapped by ``inheritable_thread_target``
+    with the session, so the staging write's jobs carry the caller's job
+    group and tags. Both writes have finished when this returns or
+    raises: the pool joins its thread before the first error propagates."""
+    stage = inheritable_thread_target(snapshot.sparkSession)(_stage_snapshot)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        staged = pool.submit(stage, snapshot, staging)
+        counts = _write_changelog(changes, log_dir, run_date)
+    staged.result()
+    return counts
+
+
+def _publish_snapshot(staging: str, root: str, name: str, run_date: str) -> str:
+    """Publish the day's staged snapshot and make it the one readers resolve.
+
+    Called only once the changelog is written and the snapshot fully
+    staged (stage both, then publish). The staging dir is published by
+    TWO renames, never an in-place rewrite: on a RE-run of the day
+    _LATEST already names, an in-place overwrite would expose a
+    half-written dir to every reader resolving the pointer for the full
+    duration of the Spark write; the rename swap shrinks that window to
+    two metadata ops (same publish-then-point discipline as
+    engine/txlog.py, one level down). Staging dirs start with '.' so
+    _snapshot_dates can never mistake one for a complete snapshot."""
+    snap_parent = os.path.dirname(staging)
+    snap_dir = os.path.join(snap_parent, f"run_date={run_date}")
     displaced = None
     if os.path.exists(snap_dir):
         displaced = os.path.join(snap_parent, f".old_{run_date}_{uuid.uuid4().hex[:8]}")
@@ -324,12 +362,14 @@ def run_source(spark: SparkSession, root: str, src: dict, run_date: str) -> dict
     prev_path = _resolve_prev(root, spec.name, run_date)
     first_run = prev_path is None
     log_dir = os.path.join(root, spec.name, "changelog", f"run_date={run_date}")
+    staging = os.path.join(
+        root, spec.name, "snapshot", f".staging_{run_date}_{uuid.uuid4().hex[:8]}"
+    )
     diff = None
     try:
         if first_run:
             # first ever run: no previous snapshot → all rows are inserts
-            counts = _write_changelog(_inserts(curr, spec), log_dir, run_date)
-            new_snapshot = curr
+            counts = _write_day(_inserts(curr, spec), curr, log_dir, staging, run_date)
         else:
             # the previous snapshot is this job's own output, written from
             # the same key and tracked columns: read it with curr's schema
@@ -337,18 +377,22 @@ def run_source(spark: SparkSession, root: str, src: dict, run_date: str) -> dict
             prev = spark.read.schema(curr.schema).parquet(prev_path)
             if spec.extract_type == "full":
                 changes = snapshot_diff(prev, curr, spec).where(F.col("op") != "N")
-                counts = _write_changelog(changes, log_dir, run_date)
-                new_snapshot = curr
+                counts = _write_day(changes, curr, log_dir, staging, run_date)
             else:
                 # delta feed: deletes undetectable; both outputs come from
                 # one persisted diff
                 extract_rows = Observation("extract")
                 observed = curr.observe(extract_rows, F.count(F.lit(1)).alias("rows"))
                 diff = snapshot_diff(prev, observed, spec).persist()
-                counts, new_snapshot = _delta_day(
-                    diff, curr, spec, extract_rows, log_dir, run_date
+                counts = _delta_day(
+                    diff, curr, spec, extract_rows, log_dir, staging, run_date
                 )
-        snap_dir = _publish_snapshot(new_snapshot, root, spec.name, run_date)
+        snap_dir = _publish_snapshot(staging, root, spec.name, run_date)
+    except BaseException:
+        # a failed write publishes nothing: the day's snapshot and
+        # _LATEST stay as they were
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     finally:
         if diff is not None:
             diff.unpersist()

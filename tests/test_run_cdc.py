@@ -430,3 +430,75 @@ def test_second_day_job_count(spark, tmp_path, cli):
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert 0 < len(jobs) <= bound[name], (name, len(jobs))
+
+
+def _raise_after(fn):
+    """``fn`` that raises once it has done its work, so a failed write
+    leaves whatever output it had made behind."""
+
+    def failing(*args, **kwargs):
+        fn(*args, **kwargs)
+        raise RuntimeError("injected write failure")
+
+    return failing
+
+
+@pytest.mark.parametrize("failing", ["_write_changelog", "_stage_snapshot"])
+@pytest.mark.parametrize("source", ["orders", "customer"])  # a full day, a delta day
+def test_failed_write_publishes_nothing(spark, tmp_path, cli, monkeypatch, failing, source):
+    """A day writes its changelog and stages its snapshot (at the same
+    time on a full day); when either write raises, the error reaches the
+    caller and the day publishes nothing: no snapshot, no pointer move,
+    no leftover dir. A clean re-run then produces what an undisturbed
+    run does."""
+    base, out, ref = (str(tmp_path / d) for d in ("extracts", "cdc_out", "ref_out"))
+    _write_extracts(spark, base)
+    src = {s["name"]: s for s in _config(base, out)["sources"]}[source]
+    for root in (out, ref):
+        cli.run_source(spark, root, src, "d1")
+    want = cli.run_source(spark, ref, src, "d2")
+    snap_root = os.path.join(out, source, "snapshot")
+    ptr = os.path.join(out, source, "_LATEST")
+    listing, latest = sorted(os.listdir(snap_root)), open(ptr).read()
+
+    with monkeypatch.context() as m:
+        m.setattr(cli, failing, _raise_after(getattr(cli, failing)))
+        with pytest.raises(RuntimeError, match="injected write failure"):
+            cli.run_source(spark, out, src, "d2")
+    assert not os.path.exists(os.path.join(snap_root, "run_date=d2"))
+    assert open(ptr).read() == latest
+    assert sorted(os.listdir(snap_root)) == listing, "a failed day must leave no dir behind"
+
+    got = cli.run_source(spark, out, src, "d2")
+    assert got["counts"] == want["counts"]
+    assert open(ptr).read().endswith("run_date=d2")
+    assert _rows(spark.read.parquet(got["snapshot"])) == _rows(spark.read.parquet(want["snapshot"]))
+
+
+def test_run_source_jobs_stay_in_callers_group(spark, tmp_path, cli):
+    """Every Spark job a run_source call launches, the staging thread's
+    included, carries the caller's job group: the group's job ids equal
+    the ids the status store saw during the call. A job that escaped the
+    group would also escape test_second_day_job_count's bound."""
+    base, out = str(tmp_path / "extracts"), str(tmp_path / "cdc_out")
+    _write_extracts(spark, base)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    for day in ("d1", "d2"):
+        for src in _config(base, out)["sources"]:
+            before = job_ids()
+            group = f"run_cdc_group_{src['name']}_{day}_{uuid.uuid4().hex[:8]}"
+            sc.setJobGroup(group, group)
+            try:
+                cli.run_source(spark, out, src, day)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            launched = job_ids() - before
+            assert launched, (src["name"], day)
+            assert set(sc.statusTracker().getJobIdsForGroup(group)) == launched, (src["name"], day)

@@ -2,9 +2,29 @@
 
 from __future__ import annotations
 
+import pytest
+
 from engine import registry
+from engine.io import SESSION_CONF, scoped_conf
 
 registry.load_all()
+
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+#: Spark's default checkpoint file manager and the one the engine sets
+_MANAGERS = {
+    "FileContextBasedCheckpointFileManager": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    ),
+    "FileSystemBasedCheckpointFileManager": SESSION_CONF[_MANAGER_CONF],
+}
+
+
+@pytest.fixture(params=sorted(_MANAGERS))
+def checkpoint_manager(request, spark):
+    """Run the test under each checkpoint file manager in turn."""
+    with scoped_conf(spark, {_MANAGER_CONF: _MANAGERS[request.param]}):
+        yield request.param
 
 
 def test_watermark_drops_late_row(spark, sf_dir):
@@ -24,14 +44,15 @@ def test_cdc_pipeline_idempotent_vs_batch(spark, sf_dir):
     assert s == b
 
 
-def test_cdc_pipeline_checkpoint_restart_exactly_once(spark, sf_dir):
+def test_cdc_pipeline_checkpoint_restart_exactly_once(spark, sf_dir, checkpoint_manager):
     """Recovery semantics across a query RESTART: run the CDC merge over
     half the feed with a persistent checkpoint, stop, add the rest of the
     files, restart from the same checkpoint. The restarted query must
     process ONLY the new files (no version is written for an
     already-committed batch — at-least-once delivery + idempotent merge
     + checkpoint = exactly-once state), and the final snapshot must equal
-    the batch latest-per-key over the whole feed."""
+    the batch latest-per-key over the whole feed. This must hold under
+    Spark's default checkpoint file manager and under the engine's."""
     import os
     import shutil
     import tempfile
